@@ -165,11 +165,11 @@ def ddl_registry_fold(
     registry = TableRegistry()
     policy = ErrorPolicy(policy)
     fail_at: dict[int, int] = {}
-    ctl = (
+    ctl = sorted(
         ctl_source.filter(F.col("op") == "table_schema")
         .select("relid", "lsn", "schema_json", "topic")
-        .orderBy("lsn")
-        .collect()
+        .collect(),
+        key=lambda r: r["lsn"],
     )
     for r in ctl:
         if r["relid"] in fail_at:

@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bottledwater_pg_spark.operators.materialize import append_only, materialize
+from bottledwater_pg_spark.operators.materialize import (
+    append_only,
+    compact,
+    drop_tombstones,
+    materialize,
+)
 from bottledwater_pg_spark.session import load_table
 from bottledwater_pg_spark.sources.generator import (
     MutationSpec,
@@ -798,7 +803,7 @@ def cdc_schema_evolution_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     rename) and reports, per surviving key, the topic of its LAST
     event — renamed for the post-rename updates, original otherwise.
     """
-    from bottledwater_pg_spark.plans.envelope import DML_OPS, OP_DELETE
+    from bottledwater_pg_spark.plans.envelope import ROW_JSON_OPTIONS
     from bottledwater_pg_spark.schema_tracker import table_schema_events
     from bottledwater_pg_spark.sources.generator import snapshot_events
 
@@ -828,22 +833,10 @@ def cdc_schema_evolution_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(table_schema_events(base, relid, "customer_renamed", lsn=1))
         .unionByName(upd_rows)
     )
-    dml = stream.filter(F.col("op").isin(*DML_OPS) & F.col("key").isNotNull())
-    latest = dml.groupBy("key").agg(
-        F.max_by(F.struct("op", "lsn", "new_row", "topic"), F.col("lsn")).alias(
-            "last"
-        )
-    )
-    survivors = latest.filter(
-        (F.col("last.op") != OP_DELETE) & F.col("last.new_row").isNotNull()
-    )
-    from bottledwater_pg_spark.plans.envelope import ROW_JSON_OPTIONS
-
+    survivors = drop_tombstones(compact(stream, extra_cols=("topic",)))
     return survivors.select(
-        F.from_json(F.col("last.new_row"), base.schema, ROW_JSON_OPTIONS).alias(
-            "r"
-        ),
-        F.col("last.topic").alias("last_topic"),
+        F.from_json("new_row", base.schema, ROW_JSON_OPTIONS).alias("r"),
+        F.col("topic").alias("last_topic"),
     ).select("r.*", "last_topic")
 
 
@@ -1194,10 +1187,6 @@ def cdc_many_table_fanout_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent per-table JOB shape the reference's loop actually runs
     stays exercised (and measured for table-count flatness) by
     ``cdc_replicate_all_counts`` and the bench many_table soak."""
-    from bottledwater_pg_spark.operators.materialize import (
-        compact,
-        drop_tombstones,
-    )
     from bottledwater_pg_spark.plans.envelope import ROW_JSON_OPTIONS
 
     cust = load_table(spark, sf_dir, "customer")

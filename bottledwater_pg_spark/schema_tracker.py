@@ -93,13 +93,14 @@ def table_schema_events(
 def resolve_schemas(events: DataFrame, tracker: SchemaTracker | None = None):
     """Fold every TableSchema control event in the stream into the
     tracker, newest-last by lsn. Collects only control events — a
-    per-table trickle, never the row stream."""
+    per-table trickle, never the row stream — and sorts them on the
+    driver: one job, not a range sort's sample + shuffle + collect."""
     tracker = tracker or SchemaTracker()
-    ctl = (
+    ctl = sorted(
         events.filter(F.col("op") == OP_TABLE_SCHEMA)
         .select("relid", "lsn", "schema_json")
-        .orderBy("lsn")
-        .collect()
+        .collect(),
+        key=lambda r: r["lsn"],
     )
     for r in ctl:
         tracker.observe(r["relid"], r["schema_json"])

@@ -34,6 +34,11 @@ from bottledwater_pg_spark.operators.materialize import compact, drop_tombstones
 from bottledwater_pg_spark.plans.envelope import ROW_JSON_OPTIONS, envelope_schema
 from bottledwater_pg_spark.streaming import fsio
 
+# The committed keyed state: compact(..., extra_cols=("topic",)) rows.
+# Reads pin this schema so they plan without a parquet footer job.
+STATE_COLS = ("key", "op", "lsn", "new_row", "topic")
+STATE_SCHEMA = T.StructType([envelope_schema()[c] for c in STATE_COLS])
+
 
 def _run_key_of(checkpoint_dir: str) -> str:
     """Stable slice namespace for per-epoch state writes: epoch ids
@@ -234,10 +239,12 @@ def write_kafka_envelope_stream(
 class StreamingMaterializer:
     """foreachBatch-driven latest-by-key state maintenance.
 
-    Per micro-batch: compact the batch's events, merge with the stored
-    state, re-compact, atomically replace the state. Because the merge
-    key includes lsn-max, reprocessing a batch after failure yields the
-    same state (idempotent => exactly-once effective semantics).
+    Per micro-batch: one latest-by-lsn compaction of the stored state
+    (read with its schema pinned) unioned with the batch's raw events,
+    committed as the next state generation — two Spark jobs per table,
+    the exchange and the write. The lsn-max winner makes a replayed
+    batch yield the same state (idempotent => exactly-once effective
+    semantics).
     """
 
     def __init__(self, spark: SparkSession, state_dir: str,
@@ -336,7 +343,9 @@ class StreamingMaterializer:
     def read_state(self) -> DataFrame | None:
         if not self._have_state:
             return None
-        return self.spark.read.parquet(self._state_path())
+        return self.spark.read.schema(STATE_SCHEMA).parquet(
+            self._state_path()
+        )
 
     def current_schema(self) -> T.StructType:
         """The newest schema seen in-band (drift mode), else the
@@ -403,11 +412,12 @@ class StreamingMaterializer:
                 OP_TABLE_SCHEMA,
             )
 
-            ctl = (
+            # sorted on the driver: one job, not a range sort's three
+            ctl = sorted(
                 batch.filter(F.col("op") == OP_TABLE_SCHEMA)
                 .select("relid", "lsn", "schema_json")
-                .orderBy("lsn")
-                .collect()
+                .collect(),
+                key=lambda r: r["lsn"],
             )
             for r in ctl:
                 if r["relid"] != self.relid or self.failed_at_lsn is not None:
@@ -456,23 +466,17 @@ class StreamingMaterializer:
                         f"run={self._run_key}", f"epoch={epoch_id}",
                     )
                 )
-        # compact the incoming batch, merge with stored state, compact
-        # again — tombstones are KEPT in the state so a delete in a
-        # later micro-batch still beats an insert already in the state
-        # (and vice versa under out-of-order replay, decided by lsn);
-        # the winning event's topic rides along so rename cells can
-        # report post-rename routing
-        compacted_batch = compact(batch, extra_cols=("topic",))
+        # compact(prev ∪ batch) in ONE exchange: pre-compacting the
+        # batch could not change a winner, since max-lsn is idempotent
+        # and an lsn tie can only be an exact replay. Tombstones are
+        # KEPT so a later delete still beats a stored insert (and vice
+        # versa under out-of-order replay); the winner's topic rides
+        # along for the rename cells. New generation + pointer flip: a
+        # crash mid-write never corrupts state (statecommit.py).
+        merged = batch.select(*STATE_COLS)
         prev = self.read_state()
-        merged = (
-            compacted_batch
-            if prev is None
-            else prev.unionByName(compacted_batch)
-        )
-        # write-new-generation-then-flip-pointer so a crash mid-write
-        # never corrupts state (statecommit.py's window argument); the
-        # merged rows are themselves a valid envelope slice (DML ops,
-        # non-null keys), so the re-merge is the same compact()
+        if prev is not None:
+            merged = prev.unionByName(merged)
         self._commit_state(compact(merged, extra_cols=("topic",)))
 
     def expire_tombstones(self, up_to_lsn: int | str) -> int:

@@ -12,10 +12,19 @@ import pytest
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _test_driver_mem() -> str:
+    """A quarter of host memory, 2-8 GiB. The package's 48g default lets
+    the one long-lived test JVM grow past a small host's RAM and be
+    OOM-killed mid-suite; a capped heap is collected instead."""
+    mem_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{max(2, min(8, mem_gib // 4))}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
     from bottledwater_pg_spark.session import get_spark
 
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _test_driver_mem())
     spark = get_spark("bottledwater-tests", shuffle_partitions=8)
     yield spark
 

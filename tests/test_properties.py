@@ -34,6 +34,18 @@ def _model_compact(rows):
     return {k: v for k, v in state.items()}
 
 
+def _unique_lsns(raw):
+    """Make lsn unique per key (duplicate (key, lsn) winners would be
+    tie-broken arbitrarily in both models — not the law under test)."""
+    seen: dict[tuple[int, int], int] = {}
+    rows = []
+    for k, op, lsn in raw:
+        bump = seen.get((k, lsn), 0)
+        seen[(k, lsn)] = bump + 1
+        rows.append((k, op, lsn * 1000 + bump))
+    return rows
+
+
 @settings(
     max_examples=25,
     deadline=None,
@@ -43,14 +55,7 @@ def _model_compact(rows):
 def test_compact_matches_pure_python_fold(spark, raw):
     from bottledwater_pg_spark.operators.materialize import compact
 
-    # make lsn unique per key (duplicate (key, lsn) winners would be
-    # tie-broken arbitrarily in both models — not the law under test)
-    seen: dict[tuple[int, int], int] = {}
-    rows = []
-    for k, op, lsn in raw:
-        bump = seen.get((k, lsn), 0)
-        seen[(k, lsn)] = bump + 1
-        rows.append((k, op, lsn * 1000 + bump))
+    rows = _unique_lsns(raw)
 
     df = spark.createDataFrame(
         [
@@ -65,6 +70,51 @@ def test_compact_matches_pure_python_fold(spark, raw):
     want = {
         f'{{"k":{k}}}': v for k, v in _model_compact(rows).items()
     }
+    assert got == want
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_events, st.randoms(use_true_random=False))
+def test_streaming_merge_matches_pure_python_fold(spark, tmp_path, raw, rnd):
+    """Any split of the events into micro-batches, lsns out of order
+    across batches and one batch replayed at the end, leaves the
+    materializer's state equal to the latest-by-lsn model of all the
+    events: tombstones kept, each winner's topic carried."""
+    import tempfile
+
+    from bottledwater_pg_spark.streaming.stream import StreamingMaterializer
+
+    rows = _unique_lsns(raw)
+    rnd.shuffle(rows)
+    # at most 4 batches: each costs two Spark jobs
+    n_cuts = rnd.randint(0, min(3, len(rows) - 1))
+    cuts = sorted(rnd.sample(range(1, len(rows)), n_cuts))
+    batches = [rows[a:b] for a, b in zip([0, *cuts], [*cuts, len(rows)])]
+    batches.append(rnd.choice(batches))
+
+    def envelope(k, op, lsn):
+        payload = None if op == "delete" else f'{{"payload":{lsn}}}'
+        return (f'{{"k":{k}}}', op, lsn, payload, f"t{lsn % 3}")
+
+    with tempfile.TemporaryDirectory(dir=tmp_path) as state:
+        mat = StreamingMaterializer(spark, state, None)
+        for epoch, rows_in in enumerate(batches):
+            mat.process_batch(
+                spark.createDataFrame(
+                    [envelope(*r) for r in rows_in],
+                    "key string, op string, lsn long, new_row string, "
+                    "topic string",
+                ),
+                epoch,
+            )
+        got = sorted(tuple(r) for r in mat.read_state().collect())
+    want = sorted(
+        envelope(k, op, lsn) for k, (lsn, op) in _model_compact(rows).items()
+    )
     assert got == want
 
 

@@ -69,6 +69,69 @@ def test_streaming_is_idempotent_under_replay(spark, sf_dir):
         )
 
 
+def _job_stage_names(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; return, per job it
+    ran, the names (call sites) of that job's stages."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"{group}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = [
+        [tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+    return [[s.name for s in job if s is not None] for job in stages]
+
+
+def test_materializer_job_budget_per_batch(spark, sf_dir, tmp_path):
+    """The per-batch Spark-job budget, counted by job group: a keyed
+    merge into standing state is one exchange plus the write (2 jobs),
+    read_state() plans from the pinned schema without running a job,
+    and drift mode's control-trickle collect is one job (sorted on the
+    driver, not by a range sort's sample + shuffle + collect)."""
+    from bottledwater_pg_spark.plans.envelope import envelope_schema
+    from bottledwater_pg_spark.schema_tracker import table_schema_events
+
+    relid = 16385
+    cust = load_table(spark, sf_dir, "customer")
+    events = table_schema_events(cust, relid, "customer", lsn=-1).unionByName(
+        generate_cdc(
+            cust, ["c_custkey"], F.col("c_custkey"), relid, "customer", SPEC
+        )
+    )
+    events.write.parquet(str(tmp_path / "events"))
+    # a batch that plans without a footer job, like a file-source one
+    batch = spark.read.schema(envelope_schema()).parquet(
+        str(tmp_path / "events")
+    )
+
+    mat = StreamingMaterializer(spark, str(tmp_path / "keyed"), cust.schema)
+    mat.process_batch(batch, 0)
+    merge = _job_stage_names(spark, "merge", lambda: mat.process_batch(batch, 1))
+    assert len(merge) == 2, merge
+    assert _job_stage_names(spark, "read", mat.read_state) == []
+
+    drift = StreamingMaterializer(
+        spark, str(tmp_path / "drift"), cust.schema, relid=relid
+    )
+    drift.process_batch(batch, 0)
+    jobs = _job_stage_names(spark, "drift", lambda: drift.process_batch(batch, 1))
+    collects = [j for j in jobs if any(n.startswith("collect at") for n in j)]
+    assert len(collects) == 1, jobs
+    assert drift.current_schema() == cust.schema
+    got, want = mat.current_rows(), materialize(events, cust.schema)
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
 def test_streaming_schema_drift_re_resolution(spark, sf_dir):
     """Mid-stream DDL drift (SURVEY §7.4): a v2 TableSchema control
     event arrives in a later micro-batch with a new column. The
